@@ -49,7 +49,7 @@ object CurationQueries {
           .as("text"))
 
   /** Shared DSIR weight frame for q_dsir_weights / q_select_dsir — target =
-    * the doc_id%7==0 slice of the suffix-planted corpus. Pinned once per
+    * the doc_id%7==0 slice of the suffix-planted corpus. Persisted once per
     * (session, input) (r6): the two consumers each re-tokenized the corpus
     * twice (full + target slice) per invocation for the same
     * document-sized weight frame. */
@@ -60,11 +60,10 @@ object CurationQueries {
       val feats = Curation.bucketCounts(toTok(aug), DsirB)
       val tgtFeats = Curation.bucketCounts(
         toTok(aug.filter(col("docid").cast("long") % 7 === 0)), DsirB)
-      graft.plans.Pinned.pin(
-        Curation.dsirWeights(feats, Curation.dsirDeltas(feats, tgtFeats, DsirB)))
+      Memo.persisted(Curation.dsirWeights(feats, Curation.dsirDeltas(feats, tgtFeats, DsirB)))
     }
 
-  /** Pinned once per (session, input) (r6): the feature frame is the
+  /** Persisted once per (session, input) (r6): the feature frame is the
     * shared prefix of LR training (warm phase), q_lr_score and
     * q_select_classifier — each invocation re-tokenized the corpus for the
     * same document-sized hashed-presence frame. */
@@ -72,7 +71,7 @@ object CurationQueries {
   private def lrFeat(s: SparkSession, d: String): DataFrame =
     lrFeatMemo.getOrBuild((s, s"$d|lrfeat")) {
       val aug = lrAug(s, d)
-      graft.plans.Pinned.pin(
+      Memo.persisted(
         Curation.presenceFeatures(toTok(aug), LrB)
           .join(aug.select("docid", "y"), "docid"))
     }

@@ -133,13 +133,13 @@ object ExtraQueries {
   /** The planted chain fixture's resolved cluster assignment — the shared
     * prefix of q_dedup_cc and q_dedup_emit (exact-Jaccard pairs →
     * large/small-star components → survivor election), resolved once per
-    * (session, input) and pinned node-sized (r6; same registry economics as
+    * (session, input) and persisted node-sized (r6; same registry economics as
     * the bpe/lr/costats memos — the first consumer pays the build, every
     * later invocation reads the assignment). */
   private val ccMemo = new Memo.BoundedMemo[DataFrame](_.unpersist(false))
   private def plantedClusters(s: SparkSession, d: String): DataFrame =
     ccMemo.getOrBuild((s, s"$d|plantedcc")) {
-      graft.plans.Pinned.pin(
+      Memo.persisted(
         Dedup.nearDupClusters(
           Dedup.ngramJaccardPairs(tdWithPlantedNearDups(s, d), 2, 0.85)))
     }

@@ -5,6 +5,8 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.Tokenize
 
 /** Process-lifetime memo behind the driver-contract query registry.
@@ -27,6 +29,10 @@ import graft.operators.Tokenize
   */
 object Memo {
 
+  /** Every BoundedMemo ever constructed, including the ones private to the
+    * query objects, so [[invalidate]] and [[totalEntries]] cannot miss one. */
+  private val registry = new java.util.concurrent.CopyOnWriteArrayList[BoundedMemo[_]]()
+
   /** Bounded access-ordered memo; stopped sessions purged on every access
     * (their persisted frames died with the session — no unpersist needed or
     * safe), LRU entries evicted WITH unpersist once size exceeds the cap.
@@ -39,6 +45,8 @@ object Memo {
     * session's minutes-long model build. A failed build propagates to its
     * waiters and clears the latch so a retry can rebuild. */
   private[graft] final class BoundedMemo[V](onEvict: V => Unit) {
+    registry.add(this)
+
     private def maxEntries: Int =
       sys.props.getOrElse("graft.memo.max", "8").toInt
 
@@ -100,12 +108,11 @@ object Memo {
   private val modelMemo = new BoundedMemo[(DataFrame, DataFrame)]({ case (d, s) =>
     d.unpersist(false); s.unpersist(false)
   })
-  // stores (raw persisted frame, row count): eviction must unpersist the
-  // RAW frame — `uncacheQuery(cascade = false)` matches by plan equality,
-  // so unpersisting the size-compacted coalesce VIEW would be a no-op and
-  // leak the cache entry (review finding, r6). Consumers get the view,
-  // rebuilt per call from the stored count (no job — a plan wrapper).
-  private val edgesMemo = new BoundedMemo[(DataFrame, Long)](_._1.unpersist(false))
+  // stores (raw persisted frame, size-compacted view): eviction must
+  // unpersist the RAW frame — `uncacheQuery(cascade = false)` matches by
+  // plan equality, so unpersisting the coalesce VIEW would be a no-op and
+  // leak the cache entry (review finding, r6). Consumers get the view.
+  private val edgesMemo = new BoundedMemo[(DataFrame, DataFrame)](_._1.unpersist(false))
   private val rankedMemo = new BoundedMemo[(DataFrame, DataFrame)]({ case (a, b) =>
     a.unpersist(false); b.unpersist(false)
   })
@@ -113,9 +120,15 @@ object Memo {
   private val ivfMemo = new BoundedMemo[Array[Array[Double]]](_ => ())
   private val bpeMemo = new BoundedMemo[Seq[(Long, String, String, Long)]](_ => ())
 
+  /** `df` persisted and materialized, for a memo whose eviction
+    * unpersists it (a localCheckpoint pin cannot be released that way). */
+  private[graft] def persisted(df: DataFrame): DataFrame = {
+    df.persist(StorageLevel.MEMORY_AND_DISK).count()
+    df
+  }
+
   /** Total live entries across all memos (test hook for the LRU bound). */
-  private[graft] def totalEntries: Int =
-    tokdocsMemo.size + costatsMemo.size + modelMemo.size + ivfMemo.size + bpeMemo.size
+  private[graft] def totalEntries: Int = registry.asScala.map(_.size).sum
 
   /** Version key for the on-disk model cache, derived from the BYTECODE of
     * the classes that pin induction semantics (tokenizer, counting,
@@ -181,19 +194,19 @@ object Memo {
     * the E2/E3 memos). */
   def kgEdgesOf(spark: SparkSession, sfDir: String, cfg: WsidConfig): DataFrame = {
     // r6: materialize at build time (the count was always charged to the
-    // warm phase — Bench counts this frame immediately) and hand every
-    // consumer a size-compacted view: the whole q_kg_* family scans this
-    // edge frame per query, and a KB-sized cached frame otherwise costs
-    // core-count task launches per scan (Tuning.compact is a narrow
-    // wrapper; unchanged at production edge counts). Graph results are
+    // warm phase — Bench counts this frame immediately) and compact it
+    // once, right after that count: every consumer gets the same
+    // size-compacted view. The whole q_kg_* family scans this edge frame
+    // per query, and a KB-sized cached frame otherwise costs core-count
+    // task launches per scan (Tuning.compact is a narrow wrapper;
+    // unchanged at production edge counts). Graph results are
     // partitioning-invariant by contract (GraphSpec bit-equality).
-    val (raw, rows) = edgesMemo.getOrBuild((spark, s"$sfDir|kgedges|${cfg.maxDocChars}")) {
+    edgesMemo.getOrBuild((spark, s"$sfDir|kgedges|${cfg.maxDocChars}")) {
       val e = operators.Graph.bigramEdges(
         Tokenize.tokensFrom(tokDocsOf(spark, sfDir, cfg)).toDF())
         .persist(StorageLevel.MEMORY_AND_DISK)
-      (e, e.count())
-    }
-    Tuning.compact(raw, rows)
+      (e, Tuning.compact(e, e.count()))
+    }._2
   }
 
   /** The E2 chain over the shared projection, with its two reused frames
@@ -353,15 +366,9 @@ object Memo {
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  /** Drop every memoized artifact for a session (test hygiene). */
-  def invalidate(spark: SparkSession): Unit = {
-    l3Memo.invalidate(spark)
-    rankedMemo.invalidate(spark)
-    costatsMemo.invalidate(spark)
-    tokdocsMemo.invalidate(spark)
-    modelMemo.invalidate(spark)
-    ivfMemo.invalidate(spark)
-    bpeMemo.invalidate(spark)
-    edgesMemo.invalidate(spark)
-  }
+  /** Drop every memoized artifact for a session (test hygiene). Newest memo
+    * first: a memo built over another memo's frame is constructed after it,
+    * so dependents are uncached before the frames they read. */
+  def invalidate(spark: SparkSession): Unit =
+    registry.asScala.reverseIterator.foreach(_.invalidate(spark))
 }

@@ -21,9 +21,7 @@ import org.apache.spark.sql.functions._
   * (default 60, the amplification factor), GRAFT_BENCH_PARTS (default 48,
   * input splits AND shuffle partitions, fixed across levels),
   * GRAFT_BENCH_ONLY (single-level mode for the bin/scaling.sh wrapper),
-  * GRAFT_LOCAL_DIR (tmpfs shuffle dir), GRAFT_DEBUG_JOBS (per-job
-  * profiling listener — NOT for measured runs; its bus thread shares the
-  * pinned CPU).
+  * GRAFT_LOCAL_DIR (tmpfs shuffle dir).
   */
 object ScalingBench {
 
@@ -90,20 +88,6 @@ object ScalingBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.contains("GRAFT_DEBUG_JOBS")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        private val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.put(js.jobId, (System.nanoTime(),
-            js.stageInfos.map(si => s"${si.name.takeWhile(_ != '.')}x${si.numTasks}").mkString("+")))
-        override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          Option(starts.remove(je.jobId)).foreach { case (t0, desc) =>
-            val ms = (System.nanoTime() - t0) / 1000000
-            if (ms > 300) println(f"[job] cores=$cores job=${je.jobId}%3d ${ms}%6d ms  $desc")
-          }
-        }
-      })
-    }
     try {
       import spark.implicits._
       // repartition the (single-file) base BEFORE amplifying: replica

@@ -23,24 +23,9 @@ import org.apache.spark.sql.SparkSession
   * stages still get (bytes / advisory) ≫ core-count partitions — nothing
   * here is tuned to the local core count.
   *
-  * Every value is env-overridable; `GRAFT_TUNE=off` disables the whole
-  * hook (the session then runs exactly as the caller built it). */
+  * The values are fixed constants with no environment override; changing
+  * one is a code change, measured like any other. */
 object Tuning {
-
-  /** Row-count ceiling under which a MEASURED node-sized frame may be
-    * broadcast-hinted by the iterative graph loops (guide §3.1: hint
-    * explicitly when you KNOW a side is small — these loops have just
-    * counted it). DEFAULT 0 = hints off: same-window A/B measured the
-    * hinted plans ~0.2 s/query SLOWER locally (pagerank 1.66 vs 1.44,
-    * hits 1.46 vs 1.28, authority 1.79 vs 1.53) — each broadcast build is
-    * a serialized driver step, while the unhinted exchanges of the
-    * compacted 1-partition frames are trivial and AQE-pipelined. On a
-    * cluster where the node side genuinely fits (≤ ~100 MB framed at 1M
-    * rows) the hint saves re-shuffling the edge-sized side every round —
-    * enable it there via GRAFT_BROADCAST_NODE_LIMIT; the loops only apply
-    * it when the measured count is under the limit. */
-  val broadcastNodeLimit: Long =
-    sys.env.getOrElse("GRAFT_BROADCAST_NODE_LIMIT", "0").toLong
 
   /** Size-adaptive narrow compaction of an already-materialized (pinned or
     * persisted) frame. AQE cannot re-coalesce a cached plan's output
@@ -54,7 +39,11 @@ object Tuning {
     * production row counts the target meets/exceeds the current partition
     * count and the frame is returned UNCHANGED. Callers restrict this to
     * integer-exact consumers (graph lattice, counting aggs), whose results
-    * are partitioning-invariant by spec'd contract. */
+    * are partitioning-invariant by spec'd contract.
+    *
+    * Precondition: `ds` is persisted and `rows` is the count that just
+    * materialized it. Every caller compacts right after that count, so
+    * reading the partition count plans no new job. */
   def compact[T](ds: org.apache.spark.sql.Dataset[T], rows: Long,
                  rowsPerTask: Long = 262144L): org.apache.spark.sql.Dataset[T] = {
     val cur = ds.rdd.getNumPartitions
@@ -62,41 +51,25 @@ object Tuning {
     if (want < cur) ds.coalesce(want) else ds
   }
 
-  /** Broadcast-hint a MEASURED node-sized join side when the count is under
-    * [[broadcastNodeLimit]] — the one gate shared by the iterative graph
-    * loops (pageRank / personalizedPageRank / hits), so the gating rule
-    * cannot silently diverge between them. */
-  def maybeBroadcastNodes(df: org.apache.spark.sql.DataFrame,
-                          measuredRows: Long): org.apache.spark.sql.DataFrame =
-    if (broadcastNodeLimit > 0 && measuredRows <= broadcastNodeLimit)
-      df.hint("broadcast") else df
-
   private val applied =
     java.util.Collections.newSetFromMap(
       new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
 
-  /** Idempotent per session; a no-op when GRAFT_TUNE=off. */
+  /** Idempotent per session. */
   def ensure(spark: SparkSession): Unit = {
-    if (sys.env.get("GRAFT_TUNE").contains("off")) return
     if (!applied.add(spark)) return
-    def env(k: String, dflt: String) = sys.env.getOrElse(k, dflt)
     val c = spark.conf
     // §2.2: respect the advisory post-shuffle partition size instead of
     // pinning post-shuffle parallelism at the core count. Locally this
     // collapses KB-sized exchanges to one task; at scale the same setting
     // yields (stage bytes / advisory) partitions.
-    c.set("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      env("GRAFT_AQE_PARALLELISM_FIRST", "false"))
-    // §2.2/§9: 64 MB advisory locally (Spark's default); production
-    // clusters raise it via env (the guide's 100 MB–1 GB band).
-    c.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      env("GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
+    c.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    // §2.2/§9: 64 MB advisory (Spark's default).
+    c.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
     // §3.1: let the planner pick shuffled-hash over sort-merge when the
     // per-partition build side fits, and let AQE demote sort-merge joins
     // to shuffled-hash at runtime for small stages.
-    c.set("spark.sql.join.preferSortMergeJoin",
-      env("GRAFT_PREFER_SMJ", "false"))
-    c.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-      env("GRAFT_SHJ_LOCALMAP_THRESHOLD", "64m"))
+    c.set("spark.sql.join.preferSortMergeJoin", "false")
+    c.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
   }
 }

@@ -120,13 +120,6 @@ object Graph {
     val seed = scale / n
     val teleport = seed * (dampDen - dampNum) / dampDen
 
-    // r6 (guide §3.1): every per-round join has one node-sized side (ranks
-    // into the edge join, the inflow aggregate into the node join). n was
-    // just measured, so when it is provably broadcast-safe, hint it — the
-    // edge-sized side then never exchanges. Data-adaptive: production node
-    // counts exceed the limit and keep the shuffle plan.
-    def maybeBcast(df: DataFrame): DataFrame = Tuning.maybeBroadcastNodes(df, n)
-
     var (ranks, ranksH) = Pinned.pinTracked(
       nodes.select(col("node"), lit(seed).as("rank"), col("dang")))
     var it = 0
@@ -140,11 +133,11 @@ object Graph {
         .agg(coalesce(sum(col("rank")), lit(0L)).as("dsum"))
         .select(expr(s"dsum div ${n}L").as("dshare"))
       val inflow = e
-        .join(maybeBcast(ranks.select(col("node").as("src"), col("rank"))), Seq("src"))
+        .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
         .select(col("dst").as("node"), expr("(rank * w) div ow").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("inflow"))
       val next = nodes
-        .join(maybeBcast(inflow), Seq("node"), "left")
+        .join(inflow, Seq("node"), "left")
         .crossJoin(dshare)
         .select(col("node"),
           expr(s"${teleport}L + ((coalesce(inflow, 0L) + dshare) * ${dampNum}L) div ${dampDen}L")
@@ -206,10 +199,8 @@ object Graph {
     require(nS > 0, "personalizedPageRank needs at least one source present in the graph")
     val tp = scale * (dampDen - dampNum) / dampDen / nS
 
-    // same measured-size broadcast hint as pageRank (guide §3.1)
     val nN = nodesPinned.count()
     val nodes = Tuning.compact(nodesPinned, nN)
-    def maybeBcast(df: DataFrame): DataFrame = Tuning.maybeBroadcastNodes(df, nN)
 
     var (ranks, ranksH) = Pinned.pinTracked(
       nodes.select(col("node"),
@@ -222,11 +213,11 @@ object Graph {
         .agg(coalesce(sum(col("rank")), lit(0L)).as("dsum"))
         .select(expr(s"dsum div ${nS}L").as("dshare"))
       val inflow = e
-        .join(maybeBcast(ranks.select(col("node").as("src"), col("rank"))), Seq("src"))
+        .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
         .select(col("dst").as("node"), expr("(rank * w) div ow").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("inflow"))
       val next = nodes
-        .join(maybeBcast(inflow), Seq("node"), "left")
+        .join(inflow, Seq("node"), "left")
         .crossJoin(dshare)
         .select(col("node"),
           expr(s"""is_src * ${tp}L
@@ -544,10 +535,6 @@ object Graph {
     require(n > 0, "hits on an empty edge set")
     val nodes = Tuning.compact(nodesPinned, n)
 
-    // same measured-size broadcast hint as pageRank (guide §3.1): the score
-    // side of every half-step join is node-sized and n was just counted
-    def maybeBcast(df: DataFrame): DataFrame = Tuning.maybeBroadcastNodes(df, n)
-
     /** One half-step, SPARSE form (r6 optimization): rows exist only for
       * nodes that RECEIVE mass this half-step; an absent row means score 0,
       * which the next half-step's join treats identically (a 0-score row
@@ -567,7 +554,7 @@ object Graph {
       * the handle of the raw pin backing it. */
     def halfStep(score: DataFrame, from: String, to: String): (DataFrame, Pinned.Handle) = {
       val raw = e
-        .join(maybeBcast(score.select(col("node").as(from), col("s"))), Seq(from))
+        .join(score.select(col("node").as(from), col("s")), Seq(from))
         .select(col(to).as("node"), expr("s * w").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("raw"))
       val (rawP, rawH) = Pinned.pinTracked(raw)
@@ -602,8 +589,8 @@ object Graph {
     freeH(eH)
     // one dense zero-fill at the end (the contract returns every node)
     nodes
-      .join(maybeBcast(hubs.select(col("node"), col("s").as("hub"))), Seq("node"), "left")
-      .join(maybeBcast(lastAuth.select(col("node"), col("s").as("auth"))), Seq("node"), "left")
+      .join(hubs.select(col("node"), col("s").as("hub")), Seq("node"), "left")
+      .join(lastAuth.select(col("node"), col("s").as("auth")), Seq("node"), "left")
       .select(col("node"), coalesce(col("hub"), lit(0L)).as("hub"),
         coalesce(col("auth"), lit(0L)).as("auth"))
     // result derives from the still-pinned nodes/hub/auth frames; they are

@@ -149,6 +149,19 @@ class MemoSpec extends SparkTestBase {
       s"invalidate leaked persisted frames: $before before build, $after after invalidate")
   }
 
+  test("invalidate also drops the memos private to the query objects") {
+    // the DSIR weight frame is memoized inside CurationQueries, not in
+    // Memo's own fields; invalidate must still release its pinned blocks
+    Memo.invalidate(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    SparkEntry.queries("q_dsir_weights")(spark, sfDir).collect()
+    assert(spark.sparkContext.getPersistentRDDs.size > before.size,
+      "expected q_dsir_weights to pin its memoized weight frame")
+    Memo.invalidate(spark)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"invalidate left persisted RDDs $leaked")
+  }
+
   test("memos are LRU-bounded: sweeping 10 configs holds <= graft.memo.max entries") {
     withProp("graft.memo.max", "3") {
       val before = Memo.totalEntries
