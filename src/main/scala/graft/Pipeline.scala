@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 import graft.ml.SenseInduction
@@ -50,6 +53,36 @@ object Pipeline {
   def guard(docs: Dataset[CodeDoc], cfg: WsidConfig): Dataset[CodeDoc] =
     docs.filter(length(col("content")).between(1, cfg.maxDocChars)).as(docs.encoder)
 
+  /** A one-split corpus (one row group, one small file) cut into
+    * `defaultParallelism` contiguous chunks in scan order, so E1's doc-local
+    * passes and every frame cached from them use all task slots; None for any
+    * other input, which E1 then reads as is. Reading the chunks in partition
+    * order gives back the scan. An input with an exchange is never split:
+    * its partition count is only known after running that exchange. */
+  private[graft] def splitScan(docs: Dataset[CodeDoc]): Option[Dataset[CodeDoc]] = {
+    val slots = docs.sparkSession.sparkContext.defaultParallelism
+    lazy val plan = docs.queryExecution.executedPlan
+    val oneSplit = slots > 1 && !plan.isInstanceOf[AdaptiveSparkPlanExec] &&
+      plan.find(_.isInstanceOf[Exchange]).isEmpty && plan.execute().getNumPartitions == 1
+    Option.when(oneSplit)(docs.withColumn("_scan_ord", monotonically_increasing_id())
+      .repartitionByRange(slots, col("_scan_ord")).drop("_scan_ord").as(docs.encoder))
+  }
+
+  /** All parent partitions in one group, in partition order. The default
+    * coalescer starts a group with the first partition that has a cached
+    * block, which need not be partition 0. */
+  private object InPartitionOrder extends PartitionCoalescer with Serializable {
+    def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] = {
+      val g = new PartitionGroup()
+      g.partitions ++= parent.partitions
+      Array(g)
+    }
+  }
+
+  /** The rows of a [[splitScan]] frame as one partition in scan order. */
+  private def unsplit[T](rdd: RDD[T]): RDD[T] =
+    rdd.coalesce(1, shuffle = false, Some(InPartitionOrder))
+
   final case class E1Result(
       triples: DataFrame,
       senseVec: DataFrame,
@@ -92,8 +125,9 @@ object Pipeline {
 
     val guarded = guard(docs, cfg)
 
-    // lineage invariant table: per-row sha256(content) (BASELINE.json:15)
-    val dochash = staged("dochash", Nil) {
+    // lineage invariant table: per-row sha256(content) (BASELINE.json:15),
+    // a checkpoint stage only (without one nothing would read it)
+    if (ck.isDefined) staged("dochash", Nil) {
       guarded.select(col("repo"), col("path"), col("commit"),
         sha2(col("content"), 256).as("sha256"))
     }
@@ -102,8 +136,9 @@ object Pipeline {
     // (dictionary-encoded terms) feeds coverage, marginals and context rows.
     // A caller-shared projection (Memo) is reused as-is and NOT unpersisted
     // by this run's cleanup — its lifetime belongs to the caller.
+    val split = if (sharedTokDocs.isEmpty) splitScan(guarded) else None
     val tokdocs = sharedTokDocs.getOrElse {
-      val td = Tokenize.tokDocs(guarded, cfg)
+      val td = Tokenize.tokDocs(split.getOrElse(guarded), cfg)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       persisted += td
       td
@@ -128,7 +163,10 @@ object Pipeline {
       val dict = SenseInduction.dictionary(sigcooc).collect()
         .groupBy(_.getString(0))
         .map { case (e, rows) => e -> rows.map(r => r.getString(1) -> r.getInt(2)).toMap }
-      Tokenize.contextRowsFrom(tokdocs, cfg, dict).toDF()
+      val rows = Tokenize.contextRowsFrom(tokdocs, cfg, dict)
+      // a checkpoint re-reads its files largest first: one file keeps the
+      // scan order the NMF fit below needs
+      if (split.isDefined && ck.isDefined) unsplit(rows.rdd).toDF() else rows.toDF()
     }
 
     // ctxrows is already cached in compact columnar form by staged();
@@ -139,8 +177,10 @@ object Pipeline {
       ctxrows.as[ml.ThinNMF.Ctx].rdd
     }
 
+    // the NMF fit's float sums follow its input's partitions and row order:
+    // after a split it reads the rows as the unsplit scan had them
     val senseVecRaw = staged("senses", Seq("ctxrows")) {
-      SenseInduction.senseMatrix(spark, grouped, cfg)
+      SenseInduction.senseMatrix(spark, if (split.isDefined) unsplit(grouped) else grouped, cfg)
     }
 
     val h = SenseInduction.collectH(senseVecRaw)
@@ -170,7 +210,6 @@ object Pipeline {
         TableIO.readTriples(spark, uri)
       case _ => triplesRaw
     }
-    val _ = dochash // materialized for lineage; consumed by tests/audits
     E1Result(triples, senseVec, assignments, ck,
       cleanup = () => persisted.foreach(_.unpersist(false)))
   }

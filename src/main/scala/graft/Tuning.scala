@@ -9,19 +9,18 @@ import org.apache.spark.sql.SparkSession
   * repartition/bit-equality specs and the driver's oracle hashes); only the
   * physical plan moves.
   *
-  * Why (spark_optimization_guide.md §2.2, §2.4, §3.1): the engine's frames
-  * between shuffles are mostly vocabulary-/node-sized (KB–MB), while the
-  * harness fixes `spark.sql.shuffle.partitions` at the core count. With
-  * AQE's default `coalescePartitions.parallelismFirst=true`, Spark
-  * deliberately IGNORES the advisory partition size and keeps ~core-count
-  * post-shuffle partitions "for parallelism" — so a 15 KB aggregate still
-  * schedules 32 tasks per stage, and the iterative operators (PageRank /
-  * HITS / CC / closure loops) pay that fixed task-launch overhead per
-  * round. Spark's own config reference recommends setting it to false so
-  * the coalescer respects `advisoryPartitionSizeInBytes`. That is the
-  * scale-ADAPTIVE behavior: tiny stages collapse to one task, 100 TB
-  * stages still get (bytes / advisory) ≫ core-count partitions — nothing
-  * here is tuned to the local core count.
+  * Post-shuffle partition sizing is left to AQE's defaults
+  * (`coalescePartitions.parallelismFirst=true`, 1 MB `minPartitionSize`,
+  * 64 MB `advisoryPartitionSizeInBytes`). The coalescer then targets
+  * `max(1 MB, min(64 MB, stage bytes / defaultParallelism))` per partition,
+  * which adapts to scale on its own (TuningSpec pins both ends):
+  *   - a KB-sized exchange (vocabulary-/node-sized frames, the iterative
+  *     graph loops) still collapses to ONE task;
+  *   - a MB-sized exchange spreads over the task slots instead of running
+  *     as one task on an otherwise idle host;
+  *   - at 100 TB a stage still gets (bytes / 64 MB) ≫ core-count partitions.
+  * `parallelismFirst=false` would also collapse every exchange under 64 MB
+  * to one task, which single-threads E1 (its exchanges total ~13 MB).
   *
   * The values are fixed constants with no environment override; changing
   * one is a code change, measured like any other. */
@@ -59,13 +58,6 @@ object Tuning {
   def ensure(spark: SparkSession): Unit = {
     if (!applied.add(spark)) return
     val c = spark.conf
-    // §2.2: respect the advisory post-shuffle partition size instead of
-    // pinning post-shuffle parallelism at the core count. Locally this
-    // collapses KB-sized exchanges to one task; at scale the same setting
-    // yields (stage bytes / advisory) partitions.
-    c.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-    // §2.2/§9: 64 MB advisory (Spark's default).
-    c.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
     // §3.1: let the planner pick shuffled-hash over sort-merge when the
     // per-partition build side fits, and let AQE demote sort-merge joins
     // to shuffled-hash at runtime for small stages.

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, sha2}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 
 /** Tuning.ensure's session settings and Tuning.compact's contract: the
@@ -8,18 +9,35 @@ import org.apache.spark.storage.StorageLevel
 class TuningSpec extends SparkTestBase {
 
   private val tuned = Seq(
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m",
     "spark.sql.join.preferSortMergeJoin" -> "false",
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "64m")
 
-  test("ensure sets the four confs, and a second call is a no-op") {
+  test("ensure sets two confs, keeps AQE defaults; second call no-op") {
     val s = spark.newSession() // own SQL conf, shared context
     Tuning.ensure(s)
     tuned.foreach { case (k, v) => assert(s.conf.get(k) == v, k) }
+    val conf = s.sessionState.conf
+    assert(conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+    assert(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) == 64L * 1024 * 1024)
     s.conf.set("spark.sql.join.preferSortMergeJoin", "true")
     Tuning.ensure(s)
     assert(s.conf.get("spark.sql.join.preferSortMergeJoin") == "true")
+  }
+
+  test("AQE coalescing adapts to stage size: a KB aggregate gets one task, a MB shuffle several") {
+    val s = spark.newSession()
+    Tuning.ensure(s)
+    assert(s.sparkContext.defaultParallelism == 4 && s.conf.get("spark.sql.shuffle.partitions") == "4")
+    // post-shuffle partitions after AQE ran the exchange
+    def postShuffle(df: org.apache.spark.sql.DataFrame): Int = df.rdd.getNumPartitions
+    val kb = s.range(0, 1000, 1, 4).groupBy((col("id") % 10).as("k")).count()
+    assert(postShuffle(kb) == 1)
+    // ~100k rows of 64-char hex digests: a few MB of shuffle bytes even
+    // compressed, so a ~1 MB target per partition leaves more than one
+    val mb = s.range(0, 100000, 1, 4)
+      .select(col("id"), sha2(col("id").cast("string"), 256).as("h"))
+      .repartition(col("id"))
+    assert(postShuffle(mb) > 1)
   }
 
   private def rowsOf(ds: org.apache.spark.sql.DataFrame): Seq[Long] =
